@@ -17,11 +17,12 @@ WORK = ".perfbench_work"  # inside the checkout; listed in .gitignore
 CPUS = 4  # local[4]: the core count every workload is defined at
 
 
-def fresh_work_dir() -> str:
-    work = os.path.abspath(WORK)
+def fresh_work_dir(sub: str | None = None) -> str:
+    """An empty work directory (or ``sub`` directory of it)."""
+    work = os.path.abspath(WORK if sub is None else os.path.join(WORK, sub))
     shutil.rmtree(work, ignore_errors=True)
-    for sub in ("tmp", "spark-local", "data"):
-        os.makedirs(os.path.join(work, sub))
+    for d in ("tmp", "spark-local", "data"):
+        os.makedirs(os.path.join(work, d))
     return work
 
 
@@ -59,13 +60,79 @@ def latency_summary(ms: list[float]) -> dict:
     }
 
 
+# -- process lifetime ---------------------------------------------------
+PR_SET_CHILD_SUBREAPER = 36  # linux/prctl.h
+
+
+def become_subreaper() -> None:
+    """Make this process the new parent of every orphaned descendant (a
+    JVM that outlives the Python process that started it, a Python
+    worker that outlives its daemon), so that ``stop_descendants`` can
+    wait for each of them."""
+    import ctypes
+
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER)")
+
+
+def _children_of(pid: int) -> list[int]:
+    out = []
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                rest = f.read().rsplit(")", 1)[1].split()
+        except (OSError, IndexError):
+            continue
+        if int(rest[1]) == pid and rest[0] != "Z":
+            out.append(int(d))
+    return out
+
+
+def stop_descendants(grace_s: float = 20.0) -> None:
+    """Stop every process this one started, directly or through its
+    children, and wait until each has ended: SIGTERM first (a JVM then
+    runs its shutdown hooks), SIGKILL for any still alive after
+    ``grace_s``. As a subreaper this process inherits every orphan, so
+    having no child left means no descendant is left."""
+    import signal
+
+    me = os.getpid()
+    sig, signalled = signal.SIGTERM, set()
+    deadline = time.monotonic() + grace_s
+    while True:
+        try:
+            while os.waitpid(-1, os.WNOHANG)[0] != 0:
+                pass
+        except ChildProcessError:
+            return
+        if sig == signal.SIGTERM and time.monotonic() > deadline:
+            sig, signalled = signal.SIGKILL, set()
+        todo, seen = _children_of(me), set()
+        while todo:
+            pid = todo.pop()
+            if pid in seen:
+                continue
+            seen.add(pid)
+            todo.extend(_children_of(pid))
+            if pid not in signalled:
+                try:
+                    os.kill(pid, sig)
+                except ProcessLookupError:
+                    pass
+                signalled.add(pid)
+        time.sleep(0.05)
+
+
 # -- process-tree memory ------------------------------------------------
-def driver_peak_rss_mb(root_pid: int) -> float:
-    """Peak resident set (VmHWM) of the Spark driver: the Python process
-    ``root_pid`` plus its JVM child, in MB. Python worker processes are
-    left out: how many of them are alive at any moment is scheduling
-    noise, not memory the Spark driver holds."""
-    pids = [root_pid]
+def driver_peak_rss_mb(root_pid: int) -> dict[str, float]:
+    """Peak resident set (VmHWM) of the Spark driver in MB: the Python
+    process ``root_pid`` and its JVM child, and their ``total``. Python
+    worker processes are left out: how many of them are alive at any
+    moment is scheduling noise, not memory the Spark driver holds."""
+    pids = {"python": root_pid}
     for d in os.listdir("/proc"):
         if not d.isdigit():
             continue
@@ -73,19 +140,20 @@ def driver_peak_rss_mb(root_pid: int) -> float:
             with open(f"/proc/{d}/stat") as f:
                 comm, rest = f.read().rsplit(")", 1)
             if int(rest.split()[1]) == root_pid and comm.endswith("(java"):
-                pids.append(int(d))
+                pids["jvm"] = int(d)
         except (OSError, IndexError, ValueError):
             continue
-    total_kb = 0
-    for pid in pids:
+    out = {}
+    for name, pid in pids.items():
         try:
             with open(f"/proc/{pid}/status") as f:
                 for line in f:
                     if line.startswith("VmHWM:"):
-                        total_kb += int(line.split()[1])
+                        out[name] = int(line.split()[1]) / 1024.0
         except OSError:
             continue
-    return total_kb / 1024.0
+    out["total"] = sum(out.values())
+    return out
 
 
 # -- host-phase control probe ---------------------------------------------
@@ -93,7 +161,7 @@ def driver_peak_rss_mb(root_pid: int) -> float:
 # slower. A fixed probe (allocate and touch 256 MB, sort 2M doubles) runs
 # before and after every run; a run whose probe exceeds the calm bound is
 # labelled, never replaced or retried.
-PROBE_CALM_S = 0.6
+PROBE_CALM_S = 0.12  # calm phases measured 0.07-0.10 s, slow ones 0.17 s and up
 
 
 def control_probe() -> dict:
@@ -127,6 +195,8 @@ def _canon(v):
         return ("n", str(v.normalize()))
     if isinstance(v, float):
         return ("nan",) if math.isnan(v) else ("f", v.hex())
+    if isinstance(v, (pa.MonthDayNano, datetime.timedelta)):
+        return ("i",) + interval_parts(v)
     if isinstance(v, datetime.datetime) and v.tzinfo is not None:
         # Spark answers naive-UTC TIMESTAMP as a UTC instant
         v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
@@ -141,11 +211,44 @@ def _canon(v):
     return ("s", str(v))
 
 
+def interval_parts(v) -> tuple[int, int, int]:
+    """(months, days, nanoseconds) of a DuckDB month_day_nano interval
+    or of a Spark day-time interval (a timedelta, which has no months),
+    so that equal intervals compare equal across the two encodings."""
+    if isinstance(v, pa.MonthDayNano):
+        return (v.months, v.days, v.nanoseconds)
+    return (0, v.days, (v.seconds * 10**6 + v.microseconds) * 1000)
+
+
+def _positional(t: pa.DataType) -> pa.DataType:
+    """``t`` with the fields of every struct renamed ``0``, ``1``, ...
+    where a struct repeats a field name (DuckDB's ``list_zip``)."""
+    if pa.types.is_struct(t):
+        fields = [t.field(i) for i in range(t.num_fields)]
+        dup = len({f.name for f in fields}) < len(fields)
+        return pa.struct([pa.field(str(i) if dup else f.name, _positional(f.type))
+                          for i, f in enumerate(fields)])
+    if pa.types.is_list(t):
+        return pa.list_(_positional(t.value_type))
+    if pa.types.is_large_list(t):
+        return pa.large_list(_positional(t.value_type))
+    return t
+
+
+def to_pylist(col: pa.ChunkedArray) -> list:
+    """``col.to_pylist()``; structs with repeated field names, which
+    Python dicts cannot hold, become positional (``0``, ``1``, ...)."""
+    t = _positional(col.type)
+    if t == col.type:
+        return col.to_pylist()
+    return [v for chunk in col.chunks for v in chunk.view(t).to_pylist()]
+
+
 def exact_rows(table: pa.Table) -> tuple[tuple[str, ...], list]:
     """(sorted lower-cased column names, sorted canonical rows)."""
     names = [c.lower() for c in table.column_names]
     order = sorted(range(len(names)), key=lambda i: names[i])
-    cols = [table.column(i).to_pylist() for i in order]
+    cols = [to_pylist(table.column(i)) for i in order]
     rows = sorted(repr(tuple(_canon(c[r]) for c in cols)) for r in range(table.num_rows))
     return tuple(names[i] for i in order), rows
 
@@ -169,7 +272,9 @@ def probe_norm(x):
     """The dialect probe's value normalization (tools/dialect_probe.py
     ``_norm``): 12 significant digits for floats and decimals, a 1e-12
     zero floor, instants compared naive, dates at midnight, MAP and
-    zipped-struct shapes folded."""
+    zipped-struct shapes folded, intervals as (months, days, ns)."""
+    if isinstance(x, (pa.MonthDayNano, datetime.timedelta)):
+        return "interval%r" % (interval_parts(x),)
     if isinstance(x, dict):
         if (
             set(x) == {"key", "value"}
@@ -197,7 +302,7 @@ def probe_norm(x):
 
 
 def _arrow_rows(table: pa.Table) -> list[tuple]:
-    cols = [table.column(i).to_pylist() for i in range(table.num_columns)]
+    cols = [to_pylist(table.column(i)) for i in range(table.num_columns)]
     out = []
     for r in range(table.num_rows):
         row = []

@@ -12,14 +12,18 @@ Extraction takes the registry oracle SQL of the headline queries, the
 statements of ``tools/dialect_probe.py`` ``CORPUS`` + ``WIRE_CORPUS``
 and the flows of ``tools/dml_script_probe.py`` ``SCRIPTS``. Dialect
 candidates are the stateless ``SELECT``/``WITH`` statements with a
-value check (no ``-- novalue``). DML flows get per-flow object names
+value check (no ``-- novalue``) that read no catalog. DML flows get per-flow object names
 (``<name>_<flow index>``) and an idempotent ``DROP ... IF EXISTS``
 prefix, and each rewrite is proven against DuckDB: the renamed flow
 must leave the same end state as the original.
 
-Screening runs every candidate through a live server against DuckDB
-and keeps what answers correctly; everything dropped is recorded with
-its reason in ``inputs/screened_out.json``. The compatibility sweep
+Screening runs every candidate through a live server against DuckDB.
+A candidate is dropped when DuckDB rejects it, when the engine refuses
+it by name, or when the engine fails on it or answers it wrongly (a
+known failure of the engine); every drop is recorded with its verdict
+and reason in ``inputs/screened_out.json``. Of the rest, ``PER_ROUND``
+evenly spaced tickets per class are frozen as the workload, so
+``inputs/`` holds exactly what a round sends. The compatibility sweep
 sends all 25 headline oracles through a server and records each
 result by name in ``compat.json``; it is untimed and fixes nothing.
 """
@@ -42,11 +46,23 @@ OLAP = [
     "ev_zscore_anomalies", "quantiles_by_flag",
 ]
 
+# Tickets frozen per class (every olap ticket). Sending every screened
+# dialect statement and DML flow once would make one round about 55 s
+# on a 4-core host; the benchmark's budget (48 runs of the two
+# workloads in 57 minutes, set-up included) leaves room for a round of
+# about 20 s, so an evenly spaced subset of each corpus is frozen, and
+# a round sends every frozen ticket once. 100 dialect statements give
+# that class a p90 with 10 samples beyond it.
+PER_ROUND = {"dialect": 100, "dml": 12}
+
 _CREATE = re.compile(
     r"\bCREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP\w*\s+)?(TABLE|VIEW|SEQUENCE|TYPE|MACRO)\s+"
     r"(?:IF\s+NOT\s+EXISTS\s+)?(\"[^\"]+\"|\w+)",
     re.I,
 )
+# catalog reads answer differently once the DML flows have made their
+# tables, so they are not stateless
+_CATALOG = re.compile(r"\b(duckdb_\w+|information_schema|pragma_\w+|sqlite_master)\b", re.I)
 _RENAME_TO = re.compile(r"\bRENAME\s+TO\s+(\w+)", re.I)
 
 
@@ -137,7 +153,7 @@ def extract() -> dict:
         for i, raw in enumerate(x.strip() for x in corpus.strip().splitlines()):
             if not raw or raw.startswith("--") or raw.endswith("-- novalue"):
                 continue
-            if not raw.upper().startswith(("SELECT", "WITH")):
+            if not raw.upper().startswith(("SELECT", "WITH")) or _CATALOG.search(raw):
                 continue
             dialect.append({"name": f"{corpus_name}:{i}", "sql": raw})
 
@@ -204,7 +220,7 @@ def main() -> int:
         return 0
     from perfbench.wire_query import screen
 
-    return screen(INPUTS)
+    return screen(INPUTS, PER_ROUND)
 
 
 if __name__ == "__main__":

@@ -20,7 +20,7 @@ import time
 from perfbench import common, datagen
 
 SCALE = 0.01
-SETUP_REPS = 3
+SETUP_REPS = 5
 INPUTS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "inputs")
 
 
@@ -46,9 +46,10 @@ def run(seed: int, seconds: int, trace: bool, work: str) -> dict:
     from mallard_spark.testing import compare_frames, duck_connection
 
     # set-up: a fresh SparkContext (the JVM stays up after the first)
-    # and the registry import, repeated; the median is reported
+    # and the registry import, repeated; the median is reported. A
+    # traced run needs only one
     spark, setup_s = None, []
-    for _ in range(SETUP_REPS):
+    for _ in range(1 if trace else SETUP_REPS):
         t0 = time.perf_counter()
         if spark is not None:
             spark.stop()
@@ -115,17 +116,10 @@ def run(seed: int, seconds: int, trace: bool, work: str) -> dict:
     samples, failed = [], {}
     t_start = time.perf_counter()
 
-    def more(p: int, last: float) -> bool:
-        # traced: passes A and B (the check pass warmed up); timed: whole
-        # passes, at least one; another starts only if the time left
-        # covers the last pass
-        if trace:
-            return p < 2
-        return p == 0 or (time.perf_counter() - t_start) + last <= seconds
-
-    p, last = 0, 0.0
-    while more(p, last):
-        t_pass = time.perf_counter()
+    # one pass when traced (the check pass warmed up); when timed,
+    # whole passes until ``seconds`` have passed
+    p = 0
+    while p == 0 or (not trace and time.perf_counter() - t_start < seconds):
         for q in headline:
             rid = f"p{p}:{q['name']}"
             t0 = time.perf_counter()
@@ -137,7 +131,7 @@ def run(seed: int, seconds: int, trace: bool, work: str) -> dict:
             t1 = time.perf_counter()
             samples.append({"pass": p, "cls": q["family"], "name": q["name"], "rid": rid,
                             "t0": t0, "t1": t1, "ms": (t1 - t0) * 1e3})
-        p, last = p + 1, time.perf_counter() - t_pass
+        p += 1
     out["loop_s"] = time.perf_counter() - t_start
     out.update(samples=samples, wrong=wrong, failed=failed, passes=p,
                peak_rss_mb=common.driver_peak_rss_mb(os.getpid()))

@@ -19,6 +19,7 @@ log under the work directory.
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import sys
@@ -146,6 +147,10 @@ def main() -> int:
             reply({"ports": servers.start(msg["ns"])})
         elif cmd == "stop":
             servers.stop()
+            # collect the stopped servers' garbage now, so that the next
+            # set-up does not pay for it
+            gc.collect()
+            spark.sparkContext._jvm.System.gc()
             reply({"ok": True})
         elif cmd == "trace":
             reply(tracer.dump() if tracer else {"spans": [], "counts": {}})

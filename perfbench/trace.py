@@ -64,6 +64,22 @@ SELF_LAYERS = (
 _PY4J_RELEASE = "m\nd\n"  # py4j protocol: memory command, delete subcommand
 
 
+def _py4j_kind(command) -> str:
+    """The count a py4j command goes to. Object releases run whenever
+    Python's garbage collector frees a JavaObject, and ``setCallSite``
+    is sent only when no other thread is inside a DataFrame action
+    (pyspark's ``SCCallSiteSync`` keeps one stack depth for all
+    threads), so both are timed but kept out of ``py4j_calls``, which
+    must repeat exactly."""
+    if not isinstance(command, str):
+        return "py4j_calls"
+    if command.startswith(_PY4J_RELEASE):
+        return "py4j_release_calls"
+    if command.startswith("c\n") and command.split("\n", 3)[2:3] == ["setCallSite"]:
+        return "py4j_callsite_calls"
+    return "py4j_calls"
+
+
 class Tracer:
     """Thread-aware span recorder; all state lives on the instance."""
 
@@ -94,6 +110,7 @@ class Tracer:
             "name": name,
             "parent": parent["id"] if parent else None,
             "rid": rid if rid is not None else (parent["rid"] if parent else None),
+            "thread": threading.get_ident(),
             "start": time.perf_counter(),
             "end": None,
             "py4j_s": 0.0,
@@ -217,11 +234,7 @@ class Tracer:
                     st = tracer._stack()
                     if st:
                         st[-1]["py4j_s"] += dt
-                    # object releases run whenever Python's GC collects a
-                    # JavaObject, so they are timed but kept out of the
-                    # call count, which must repeat exactly
-                    gc = isinstance(command, str) and command.startswith(_PY4J_RELEASE)
-                    tracer.count("py4j_release_calls" if gc else "py4j_calls")
+                    tracer.count(_py4j_kind(command))
                     tracer.count("py4j_s", dt)
 
             self._patch(owner, "send_command", send_command)
@@ -239,20 +252,47 @@ class Tracer:
             }
 
 
-def self_times(spans: list[dict]) -> dict[str, dict[str, float]]:
-    """Per request id: layer -> self seconds (span minus children,
-    with py4j time charged to the ``py4j`` layer)."""
+def _own_seconds(spans: list[dict]) -> dict[int, float]:
+    """Per span id: the span minus its child spans and py4j time."""
     child_s: dict[int, float] = defaultdict(float)
     for s in spans:
         if s["parent"] is not None:
             child_s[s["parent"]] += s["end"] - s["start"]
+    return {s["id"]: s["end"] - s["start"] - child_s[s["id"]] - s["py4j_s"] for s in spans}
+
+
+def self_times(spans: list[dict]) -> dict[str, dict[str, float]]:
+    """Per request id: layer -> self seconds (span minus children,
+    with py4j time charged to the ``py4j`` layer)."""
+    own = _own_seconds(spans)
     out: dict[str, dict[str, float]] = defaultdict(lambda: defaultdict(float))
     for s in spans:
-        dur = s["end"] - s["start"]
-        own = dur - child_s[s["id"]] - s["py4j_s"]
-        out[s["rid"] or "-"][s["name"]] += own
+        out[s["rid"] or "-"][s["name"]] += own[s["id"]]
         out[s["rid"] or "-"]["py4j"] += s["py4j_s"]
     return out
+
+
+def attribution_errors(spans: list[dict], window: tuple[float, float]) -> tuple[dict, float]:
+    """What the self times cannot account for: (per request id, seconds
+    of negative self time plus seconds its spans on different threads
+    overlap, i.e. are counted twice; seconds of spans without a request
+    id inside ``window``, work no request is charged for)."""
+    own = _own_seconds(spans)
+    err: dict[str, float] = defaultdict(float)
+    by_thread: dict[str, dict[int, list]] = defaultdict(lambda: defaultdict(list))
+    orphan_s = 0.0
+    for s in spans:
+        if s["rid"] is None:
+            if s["parent"] is None:
+                orphan_s += max(0.0, min(s["end"], window[1]) - max(s["start"], window[0]))
+            continue
+        err[s["rid"]] += max(0.0, -own[s["id"]])
+        by_thread[s["rid"]][s["thread"]].append([s["start"], s["end"]])
+    for rid, threads in by_thread.items():
+        if len(threads) > 1:
+            each = sum(union_ms(iv) for iv in threads.values())
+            err[rid] += each - union_ms([iv for ivs in threads.values() for iv in ivs])
+    return dict(err), orphan_s
 
 
 # SQL metrics of the Python (Arrow) evaluation nodes -> our names
@@ -335,6 +375,7 @@ def _lines(files: list[str]):
 
 
 def union_ms(intervals: list[list[float]]) -> float:
+    """Length of the union of [start, end] intervals (any unit)."""
     total, end = 0.0, None
     for a, b in sorted(intervals):
         if end is None or a > end:

@@ -6,7 +6,7 @@ separate server process. Tickets come from three frozen statement
 classes, drawn in a seeded order:
 
 - ``olap``: registry oracle SQL of the 12 relational and event
-  headline queries over the sf0.1 tables PUT during set-up;
+  headline queries over the generated tables PUT during set-up;
 - ``dialect``: stateless statements of the dialect probe corpora over
   the probe fixture tables;
 - ``dml``: multi-statement mutation flows with per-flow table names.
@@ -35,7 +35,7 @@ from perfbench import common, datagen
 
 CLASSES = ("olap", "dialect", "dml")
 SCALE = 0.01
-SETUP_REPS = 3
+SETUP_REPS = 7
 CALL_TIMEOUT_S = 60  # no ticket here takes more than a few seconds
 INPUTS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "inputs")
 
@@ -142,7 +142,7 @@ class Conn:
 
 
 def set_up(server: ServerProc, ns: str, tables: dict[str, pa.Table]) -> list[Conn]:
-    """Start both servers, PUT the sf0.1 tables and the probe fixtures
+    """Start both servers, PUT the generated tables and the probe fixtures
     to each, register the exchanger."""
     import cloudpickle
 
@@ -248,17 +248,8 @@ def request(cid: int, conn: Conn, cls: str, item: dict, rec: Recorder) -> None:
 
 
 def round_tickets(inputs: dict) -> list[tuple[str, dict]]:
-    """The fixed multiset one round sends: every olap ticket, and 96
-    dialect statements and 12 DML flows at even spacing over their
-    frozen lists. Most requests are small front-end statements, as in
-    client traffic, which also puts the median inside one class rather
-    than between two."""
-    def spaced(items: list, k: int) -> list:
-        return [items[int(i * len(items) / k)] for i in range(k)]
-
-    return ([("olap", x) for x in inputs["olap"]]
-            + [("dialect", x) for x in spaced(inputs["dialect"], 96)]
-            + [("dml", x) for x in spaced(inputs["dml"], 12)])
+    """One round: every frozen ticket of every class once."""
+    return [(cls, x) for cls in CLASSES for x in inputs[cls]]
 
 
 def client_lists(seed: int, tickets: list) -> list[list]:
@@ -267,33 +258,28 @@ def client_lists(seed: int, tickets: list) -> list[list]:
     return [[tickets[i] for i in order[c::2]] for c in range(2)]
 
 
-def client_loop(cid: int, conn: Conn, tickets: list, seconds: float | None,
-                rec: Recorder) -> None:
-    """Whole rounds of ``tickets``: one when ``seconds`` is None, else
-    as many as fit in ``seconds`` (at least one; another starts only if
-    the time left covers the last round)."""
-    start = time.perf_counter()
-    while True:
-        t_round = time.perf_counter()
-        for cls, item in tickets:
-            request(cid, conn, cls, item, rec)
-        now = time.perf_counter()
-        if seconds is None or (now - start) + (now - t_round) > seconds:
-            return
+def client_round(cid: int, conn: Conn, tickets: list, rec: Recorder) -> None:
+    for cls, item in tickets:
+        request(cid, conn, cls, item, rec)
 
 
 def run_clients(conns: list[Conn], lists: list[list], seconds: float | None,
                 rec: Recorder) -> float:
-    threads = [
-        threading.Thread(target=client_loop, args=(i, conns[i], lists[i], seconds, rec))
-        for i in range(2)
-    ]
+    """Whole rounds, both clients together: one when ``seconds`` is
+    None, else rounds until ``seconds`` have passed. A round ends when
+    both clients have sent their share, so both always send the same
+    number of rounds; if each decided alone, a client could start a
+    round the other does not, and run it without contention."""
     t0 = time.perf_counter()
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    return time.perf_counter() - t0
+    while True:
+        threads = [threading.Thread(target=client_round, args=(i, conns[i], lists[i], rec))
+                   for i in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        if seconds is None or time.perf_counter() - t0 >= seconds:
+            return time.perf_counter() - t0
 
 
 # -- verification -------------------------------------------------------------
@@ -327,9 +313,43 @@ def verify(rec: Recorder, con, inputs: dict, conns: list[Conn]) -> tuple[dict[st
 
 
 # -- screening (perfbench/freeze.py --screen) -------------------------------------
-def screen(inputs_dir: str) -> int:
+def _first_line(e: Exception) -> str:
+    return f"{type(e).__name__}: {(str(e).splitlines() or [''])[0][:160]}"
+
+
+def screen_one(conn: Conn, con, cls: str, item: dict) -> tuple[str, str] | None:
+    """None when the engine answers ``item`` right, else (verdict,
+    reason). Verdicts: ``duckdb_rejects`` (no reference answer),
+    ``engine_refuses`` (the engine names the construct it does not
+    support) and ``known_failure`` (any other error or a wrong answer:
+    a defect of the engine)."""
+    try:
+        if cls == "dml":
+            want, state = duck_flow(item["sql"], item["tables"])
+        else:
+            want = duck_answer(con, item["sql"])
+    except Exception as e:  # noqa: BLE001 - screening records every failure
+        return "duckdb_rejects", _first_line(e)
+    try:
+        # a flow runs twice: the timed loop repeats it over its own tables
+        for _ in range(2 if cls == "dml" else 1):
+            _, got = conn.get(item["sql"])
+        reason = None if want is None else check_answer(cls, got, want)
+        if cls == "dml":
+            for t, w in state.items():
+                reason = reason or check_answer(cls, conn.get(f"SELECT * FROM {t}")[1], w)
+    except pa.ArrowNotImplementedError as e:
+        return "engine_refuses", _first_line(e)
+    except Exception as e:  # noqa: BLE001 - screening records every failure
+        return "known_failure", _first_line(e)
+    return None if reason is None else ("known_failure", reason[:240])
+
+
+def screen(inputs_dir: str, per_round: dict[str, int]) -> int:
     """Run every candidate ticket once through a live server against
-    DuckDB; keep the ones answered correctly."""
+    DuckDB. Keep the ones answered right, record every other with its
+    verdict, and freeze ``per_round[cls]`` evenly spaced kept tickets
+    of each class (all when absent) as the workload."""
     work = common.fresh_work_dir()
     tables = datagen.generate(0, SCALE)
     inputs = load_inputs()
@@ -337,40 +357,26 @@ def screen(inputs_dir: str) -> int:
     server = ServerProc(work, trace=False)
     dropped: list[dict] = []
     try:
-        conns = set_up(server, "screen", tables)
-        kept: dict[str, list] = {}
+        conn = set_up(server, "screen", tables)[0]
         for cls in CLASSES:
-            kept[cls] = []
+            kept = []
             for item in inputs[cls]:
-                reason = None
-                try:
-                    for _ in range(2 if cls == "dml" else 1):
-                        _, got = conns[0].get(item["sql"])
-                    if cls == "dml":
-                        want, state = duck_flow(item["sql"], item["tables"])
-                        reason = None if want is None else check_answer(cls, got, want)
-                        for t, w in state.items():
-                            reason = reason or check_answer(
-                                cls, conns[0].get(f"SELECT * FROM {t}")[1], w)
-                    else:
-                        reason = check_answer(cls, got, duck_answer(con, item["sql"]))
-                except Exception as e:  # noqa: BLE001 - screening records every failure
-                    reason = f"{type(e).__name__}: {str(e).splitlines()[0][:160]}"
-                if reason and cls != "olap":
-                    dropped.append({"class": cls, "name": item["name"], "reason": reason[:240]})
+                verdict = screen_one(conn, con, cls, item)
+                if verdict is None:
+                    kept.append(item)
                 else:
-                    kept[cls].append(item)
-                    if reason:
-                        dropped.append({"class": cls, "name": item["name"], "reason": reason,
-                                        "kept": True})
-        for cls in CLASSES:
+                    dropped.append({"class": cls, "name": item["name"],
+                                    "verdict": verdict[0], "reason": verdict[1]})
+            k = per_round.get(cls, len(kept))
+            kept = [kept[int(i * len(kept) / k)] for i in range(min(k, len(kept)))]
             with open(os.path.join(inputs_dir, f"{cls}.json"), "w") as f:
-                json.dump(kept[cls], f, indent=1, sort_keys=True)
+                json.dump(kept, f, indent=1, sort_keys=True)
                 f.write("\n")
+            print(cls, "kept", len(kept), flush=True)
         with open(os.path.join(inputs_dir, "screened_out.json"), "w") as f:
             json.dump(dropped, f, indent=1, sort_keys=True)
             f.write("\n")
-        print({c: len(kept[c]) for c in CLASSES}, "dropped", len(dropped))
+        print("dropped", len(dropped))
     finally:
         server.close()
     return 0
@@ -388,37 +394,27 @@ def run(seed: int, seconds: int, trace: bool, work: str) -> dict:
     out: dict = {"spark_start_s": server.ready["spark_start_s"],
                  "arrow_bytes_put": datagen.arrow_bytes(tables)}
     try:
+        # the median of SETUP_REPS set-ups on fresh servers; a traced
+        # run needs only one
         setup_s = []
-        for rep in range(SETUP_REPS):
-            t0 = time.perf_counter()
-            conns = set_up(server, f"r{rep}", tables)
-            setup_s.append(time.perf_counter() - t0)
-            if rep < SETUP_REPS - 1:
+        for rep in range(1 if trace else SETUP_REPS):
+            if rep:
                 for c in conns:
                     c.close()
                 server.call("stop")
+            t0 = time.perf_counter()
+            conns = set_up(server, f"r{rep}", tables)
+            setup_s.append(time.perf_counter() - t0)
         out["setup_reps_s"] = setup_s
         marks["setup"] = time.perf_counter()
         lists = client_lists(seed, round_tickets(inputs))
-        # untimed warm-up: every olap ticket and a quarter of the rest;
-        # traced runs warm with the whole round, so that rounds A and B
-        # both find every DML flow's tables left by an earlier run
-        if trace:
-            warm = lists
-        else:
-            warm = [[t for i, t in enumerate(tl) if t[0] == "olap" or i % 4 == 0]
-                    for tl in lists]
+        # untimed warm-up: every olap ticket and a quarter of the rest
+        warm = [[t for i, t in enumerate(tl) if t[0] == "olap" or i % 4 == 0]
+                for tl in lists]
         run_clients(conns, warm, None, Recorder())
         marks["warm"] = time.perf_counter()
-        if trace:
-            # rounds A and B; their count proxies must agree exactly
-            passes = [Recorder(), Recorder()]
-            for rec in passes:
-                run_clients(conns, lists, None, rec)
-            out["trace_passes"] = passes
-        else:
-            rec = Recorder()
-            out["loop_s"] = run_clients(conns, lists, seconds, rec)
+        rec = Recorder()
+        out["loop_s"] = run_clients(conns, lists, None if trace else seconds, rec)
         marks["loop"] = time.perf_counter()
         wrong, out["state_checks"] = verify(rec, con, inputs, conns)
         marks["verify"] = time.perf_counter()
